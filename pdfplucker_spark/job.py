@@ -4,8 +4,12 @@ Replaces the reference's CLI + pool + per-doc subprocess orchestration
 (cli.py:11-167, processor.py:183-231,342-455) with one declarative plan:
 
     scan → resume filter (anti-join committed doc_ids) → size-tiered
-    repartition → mapInArrow extract → write spans_out + fails + lineage +
-    metrics
+    repartition → mapInArrow extract → persist → write spans_out (observed)
+    → concurrently {fails → metrics, lineage, detail tables} → docs_out →
+    commit
+
+The metrics row is built on the driver from Observations on the spans_out
+and fails writes; no accounting job re-reads the extraction output.
 
 Iceberg-first design, Parquet fallback (SURVEY.md §7.4): with
 ``--format iceberg`` tables are written through ``writeTo(...).append()``
@@ -21,18 +25,24 @@ Cluster run:
 from __future__ import annotations
 
 import argparse
+import functools
 import logging
 import os
 import re
 import time
 import uuid
+from concurrent.futures import ThreadPoolExecutor
 
-from pyspark.sql import DataFrame, functions as F
+import pyarrow as pa
+from pyspark import StorageLevel, inheritable_thread_target
+from pyspark.sql import DataFrame, Observation, functions as F
 
 from pdfplucker_spark.metrics import (
+    METRICS_SCHEMA,
+    doc_counters,
     fails_table,
     lineage_table,
-    run_metrics,
+    observed_metrics,
     with_lineage_cols,
 )
 from pdfplucker_spark.operators.extract import extract_bundle, extract_spans
@@ -508,27 +518,21 @@ def _run_locked(
     extract = extract_bundle if details else extract_spans
     extracted = with_lineage_cols(extract(routed, span_budget=span_budget), run_id)
 
-    # S12 live-progress analogue (processor.py:424-426): observed metrics
-    # ride the write action itself — no extra pass over the data.
-    from pyspark.sql import Observation
-
-    obs = Observation(f"extract_{run_id}")
-    extracted = extracted.observe(
-        obs,
-        F.count(F.lit(1)).alias("obs_docs"),
-        F.sum(F.when(F.col("status") != "ok", 1).otherwise(0)).alias("obs_failed"),
-        F.sum("n_input_spans").alias("obs_spans"),
-    )
-
     # One extraction pass total: spans_out, each detail table, and docs_out
     # are separate write actions — without a persist the mapInArrow stage
     # re-runs per action (2-5x cost), and with ``limit`` set LocalLimit gives
     # no determinism guarantee across actions, so docs_out (the resume
     # source) could commit doc_ids whose spans never landed in spans_out.
     # MEMORY_AND_DISK spills instead of recomputing at 100 TB partitions.
-    from pyspark import StorageLevel
-
     extracted = extracted.persist(StorageLevel.MEMORY_AND_DISK)
+
+    # S12 live-progress analogue (processor.py:424-426): the metrics row
+    # comes from Observations riding the spans_out and fails writes — no
+    # aggregation pass and no collect. Observe ABOVE persist: below it, AQE
+    # drops the collector when the runtime plan is empty (a zero-doc resume)
+    # and the Observation returns no row.
+    obs = Observation(f"extract_{run_id}")
+    observed = extracted.observe(obs, *doc_counters())
 
     def _write(df: DataFrame, name: str, mode: str = "append") -> None:
         if fmt == "iceberg":
@@ -561,9 +565,9 @@ def _run_locked(
 
     detail_cols = ["pages", "images", "tables"] if details else []
     if layout == "nested":
-        _write(extracted.drop(*detail_cols), "spans_out")
+        _write(observed.drop(*detail_cols), "spans_out")
     else:  # flat: the recommended 100 TB layout — pushdown-friendly columns
-        flat = extracted.select(
+        flat = observed.select(
             "run_id",
             "partition_id",
             "doc_id",
@@ -580,14 +584,6 @@ def _run_locked(
             F.col("s.offset").alias("offset"),
         )
         _write(flat, "spans_out")
-    if details:
-        for name in detail_cols:
-            _write(
-                extracted.select(
-                    "run_id", "doc_id", F.explode(name).alias("r")
-                ).select("run_id", "doc_id", "r.*"),
-                name,
-            )
 
     # Compact doc-level table: resume source + metrics/lineage input —
     # the accounting path never rescans span payloads.
@@ -614,17 +610,51 @@ def _run_locked(
     else:
         docs_out = docs_out.withColumn("metadata", F.lit(None).cast(METADATA_TYPE))
 
+    def _fails_then_metrics() -> dict:
+        # fails is dropDuplicates(run_id, file): its non-null row count is
+        # exactly the distinct failed-doc count run_metrics takes
+        fobs = Observation(f"fails_{run_id}")
+        _write(
+            fails_table(docs_out, run_id).observe(fobs, F.count("file").alias("n")),
+            "fails",
+        )
+        # read off the critical path: obs reaches the driver through the
+        # listener bus some time after the spans_out write returns
+        counters = obs.get
+        row = observed_metrics(run_id, t0, counters, fobs.get["n"])
+        # from an Arrow table, decoded in the JVM: a Python list would be
+        # parallelized through a Python worker (~3x the write's wall)
+        _write(
+            spark.createDataFrame(pa.Table.from_pylist([row]), METRICS_SCHEMA),
+            "metrics",
+        )
+        return {**row, "observed": counters}  # in-flight spans_out counters
+
+    def _detail(name: str) -> None:
+        _write(
+            extracted.select("run_id", "doc_id", F.explode(name).alias("r")).select(
+                "run_id", "doc_id", "r.*"
+            ),
+            name,
+        )
+
     # Accounting derives from the PERSISTED docs_out frame (no read-back
-    # scan), and docs_out is written LAST: under Iceberg a run_id present in
-    # docs_out therefore guarantees every other table append for that run —
-    # including fails/lineage/metrics — already committed, which is exactly
-    # the premise the catalog committed_view semi-joins on. Under parquet
-    # the commit marker gates everything, so order is free there.
-    _write(fails_table(docs_out, run_id), "fails")
-    _write(lineage_table(docs_out), "lineage")
-    metrics_df = run_metrics(docs_out, run_id, initial_time=t0)
-    _write(metrics_df, "metrics")
-    row = metrics_df.collect()[0].asDict()
+    # scan). Every append between spans_out and docs_out is independent, so
+    # they go concurrently from driver threads — fails then metrics, lineage,
+    # each detail table — wrapped in inheritable_thread_target so the
+    # caller's job group, description and tags cover their Spark jobs. All
+    # threads are joined before the first failure re-raises, and docs_out is
+    # written LAST: under Iceberg a run_id present in docs_out therefore
+    # guarantees every other table append for that run already committed,
+    # which is exactly the premise the catalog committed_view semi-joins on.
+    # Under parquet the commit marker gates everything.
+    tails = [_fails_then_metrics, lambda: _write(lineage_table(docs_out), "lineage")]
+    tails += [functools.partial(_detail, name) for name in detail_cols]
+    with ThreadPoolExecutor(len(tails)) as pool:
+        # one wrap per target: each thread gets its OWN copy of the local
+        # properties (a SQL write sets its execution id in that object)
+        futures = [pool.submit(inheritable_thread_target(spark)(t)) for t in tails]
+    row = [f.result() for f in futures][0]
     _write(docs_out, "docs_out")
     extracted.unpersist()
     if fmt != "iceberg":
@@ -647,10 +677,6 @@ def _run_locked(
             ),
             "commits",
         )
-    try:
-        row["observed"] = obs.get  # in-flight metrics from the write action
-    except Exception:
-        row["observed"] = None
     return row
 
 

@@ -157,6 +157,18 @@ def compact(
         #    must survive the rewrite, not depend on which footer Spark
         #    happens to infer from.
         for table in tables:
+            files = [
+                os.path.join(r, f)
+                for rid, r in _run_dirs(output, table).items()
+                if rid in old_runs
+                for f in os.listdir(r)
+                if f.endswith(".parquet")
+            ]
+            if not files:
+                # nothing committed to move: an empty append (the fails
+                # table of a run with zero failed docs) writes no files, so
+                # there is no footer to read a schema from either
+                continue
             df = committed_view(spark, output, table, merge_schema=True)
             src = (
                 F.coalesce(F.col("source_run_id"), F.col("run_id"))
@@ -166,13 +178,7 @@ def compact(
             df = df.withColumn("source_run_id", src).withColumn(
                 "run_id", F.lit(new_run)
             )
-            n_bytes = sum(
-                os.path.getsize(os.path.join(r, f))
-                for rid, r in _run_dirs(output, table).items()
-                if rid in old_runs
-                for f in os.listdir(r)
-                if f.endswith(".parquet")
-            )
+            n_bytes = sum(os.path.getsize(f) for f in files)
             n_files = max(1, round(n_bytes / (target_mb * 1024 * 1024)))
             if cluster_by and cluster_by in df.columns:
                 df = df.repartitionByRange(n_files, cluster_by).sortWithinPartitions(

@@ -6,10 +6,13 @@ The reference accumulates a mutable metrics dict in the driver
 them at the end (processor.py:24-121). In the Spark engine failures are
 data (status/error columns), so:
 
-  - ``metrics``: one aggregated row per run — total/processed/failed doc
-    counts, success rate using the reference's formula
+  - ``metrics``: one row per run — total/processed/failed doc counts,
+    success rate using the reference's formula
     ``((processed - failed)/processed)*100`` (processor.py:449-450), with
-    ``failed_docs`` as a *distinct* doc count (processor.py:98-100).
+    ``failed_docs`` as a *distinct* doc count (processor.py:98-100). The job
+    builds it on the driver from Observations on its own writes
+    (``doc_counters`` + ``observed_metrics``); ``run_metrics`` is the same
+    row as an aggregation over any doc-level frame.
   - ``fails``: one row per failed doc (the consolidated error-log analogue,
     `{file, error, timestamp}` → `(doc_id, error, run_id)`), a table rather
     than a driver-side list so it scales to billions of failures.
@@ -30,6 +33,52 @@ def with_lineage_cols(extracted: DataFrame, run_id: str) -> DataFrame:
     return extracted.withColumn("run_id", F.lit(run_id)).withColumn(
         "partition_id", F.spark_partition_id()
     )
+
+
+# run_metrics' output schema, nullability included (the sums are NULL over
+# zero docs)
+METRICS_SCHEMA = (
+    "run_id string not null, initial_time double not null, "
+    "elapsed_time double not null, total_docs bigint not null, "
+    "processed_docs bigint not null, failed_docs bigint not null, "
+    "success_rate double, total_input_spans bigint, total_pages bigint, "
+    "total_images bigint, total_tables bigint"
+)
+
+
+def doc_counters() -> list:
+    """Observation aggregates over the extraction output: the per-doc sums
+    ``observed_metrics`` needs, computed by the write action itself."""
+    return [
+        F.count(F.lit(1)).alias("obs_docs"),
+        F.sum(F.when(F.col("status") != "ok", 1).otherwise(0)).alias("obs_failed"),
+        F.sum("n_input_spans").alias("obs_spans"),
+        F.sum("n_pages").alias("obs_pages"),
+        F.sum("n_images").alias("obs_images"),
+        F.sum("n_tables").alias("obs_tables"),
+    ]
+
+
+def observed_metrics(
+    run_id: str, initial_time: float, observed: dict, failed_docs: int
+) -> dict:
+    """The ``run_metrics`` row (``METRICS_SCHEMA`` order) from ``doc_counters``
+    and the distinct failed-doc count; sums stay NULL over zero docs, as
+    SQL ``SUM`` does."""
+    docs = observed["obs_docs"]
+    return {
+        "run_id": run_id,
+        "initial_time": float(initial_time),
+        "elapsed_time": time.time() - initial_time,
+        "total_docs": docs,
+        "processed_docs": docs,  # batch engine: all docs processed
+        "failed_docs": failed_docs,
+        "success_rate": (docs - failed_docs) / docs * 100.0 if docs > 0 else 0.0,
+        "total_input_spans": observed["obs_spans"],
+        "total_pages": observed["obs_pages"],
+        "total_images": observed["obs_images"],
+        "total_tables": observed["obs_tables"],
+    }
 
 
 def run_metrics(extracted: DataFrame, run_id: str, initial_time: float | None = None) -> DataFrame:

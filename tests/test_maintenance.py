@@ -54,6 +54,42 @@ def test_compact_preserves_data_and_consolidates_runs(spark, t1_path, tmp_path):
     assert m["total_docs"] == 0
 
 
+def test_compact_zero_failure_output(spark, tmp_path):
+    """A run with no failed docs appends nothing to fails, and an empty
+    partitioned append writes no files: compact must skip that table, not
+    fail to infer its schema, and keep every table's committed row count."""
+    import pyarrow.parquet as pq
+
+    from pdfplucker_spark.gen import gen_rows, is_poison, rows_to_table
+    from pdfplucker_spark.maintenance import discover_tables
+
+    src = str(tmp_path / "clean.parquet")
+    pq.write_table(
+        rows_to_table(r for i, r in enumerate(gen_rows("t1")) if not is_poison(i)), src
+    )
+    out = str(tmp_path / "out")
+    job.run(spark, src, out, run_id="c1", partitions=4, limit=50)
+    job.run(spark, src, out, run_id="c2", partitions=4, resume=True)
+
+    def counts():
+        got = {}
+        for t in discover_tables(out):
+            has_files = any(
+                f.endswith(".parquet")
+                for _, _, fs in os.walk(os.path.join(out, t))
+                for f in fs
+            )
+            # a table with no data files has no schema to read: zero rows
+            got[t] = job.committed_view(spark, out, t).count() if has_files else 0
+        return got
+
+    before = counts()
+    assert before["fails"] == 0 and before["docs_out"] == 99
+    new_run = compact(spark, out)
+    assert job.committed_run_ids(out) == [new_run]
+    assert counts() == before
+
+
 def test_compact_twice_keeps_original_attribution(spark, t1_path, tmp_path):
     out = str(tmp_path / "out")
     job.run(spark, t1_path, out, run_id="orig", partitions=4, limit=30)
