@@ -603,10 +603,14 @@ def _run_locked(
     # metadata struct through to docs_out. The join is on the compact
     # doc-level tables only (column pruning drops the spans payload), and
     # absent inputs still get the column so the sink schema is stable.
+    # The metadata side is doc_id-UNIQUE (min: deterministic): an input
+    # repeating a doc_id k times has k extracted rows, and a join against
+    # its k metadata rows would write k² docs_out rows.
     from pdfplucker_spark.schemas import METADATA_TYPE
 
     if "metadata" in docs.columns:
-        docs_out = docs_out.join(docs.select("doc_id", "metadata"), "doc_id", "left")
+        meta = docs.groupBy("doc_id").agg(F.min("metadata").alias("metadata"))
+        docs_out = docs_out.join(meta, "doc_id", "left")
     else:
         docs_out = docs_out.withColumn("metadata", F.lit(None).cast(METADATA_TYPE))
 

@@ -26,7 +26,11 @@ from pdfplucker_spark.functions.hashing import (
     sql_expr_md5_long,
     sql_md5_long,
 )
-from pdfplucker_spark.plans.guards import DEFAULT_BUCKET_CAP, drop_oversized_buckets
+from pdfplucker_spark.plans.guards import (
+    DEFAULT_BUCKET_CAP,
+    bucket_pairs,
+    drop_oversized_buckets,
+)
 from pdfplucker_spark.sources.tables import load
 
 N_HASHES = 8
@@ -171,20 +175,19 @@ def _band_rows(sigs: DataFrame) -> DataFrame:
     key definition, shared by every consumer (self-join, incremental).
     F.concat (not concat_ws): null-propagating, matching the oracle's
     ``||`` — a null-text doc gets a NULL key on BOTH sides and never joins,
-    so engine and oracle agree on null-text rows."""
-    bands = None
-    for b in range(N_BANDS):
-        part = sigs.select(
-            "doc_id",
-            F.lit(b).alias("band"),
-            F.concat(
-                F.col(f"sig{2*b}").cast("string"),
-                F.lit("_"),
-                F.col(f"sig{2*b+1}").cast("string"),
-            ).alias("key"),
+    so engine and oracle agree on null-text rows. ONE posexplode of the
+    per-band keys (the simhash shape): one Generate over the signature
+    frame instead of an N_BANDS-way union of its projections; the
+    position is the band, so the schema stays (doc_id, band int, key)."""
+    keys = [
+        F.concat(
+            F.col(f"sig{2*b}").cast("string"),
+            F.lit("_"),
+            F.col(f"sig{2*b+1}").cast("string"),
         )
-        bands = part if bands is None else bands.unionByName(part)
-    return bands
+        for b in range(N_BANDS)
+    ]
+    return sigs.select("doc_id", F.posexplode(F.array(*keys)).alias("band", "key"))
 
 
 def _verify_jaccard(
@@ -228,21 +231,13 @@ def _minhash_pairs(d: DataFrame, bucket_cap: int | None) -> DataFrame:
     # without it the minhash scan of the corpus runs twice. Per-doc sigs are
     # 8 longs — ~80 GB at 1e9 docs, spillable (MEMORY_AND_DISK default).
     sigs = d.select("doc_id", *_sig_cols()).persist()
-    bands = drop_oversized_buckets(
-        _band_rows(sigs).persist(), ("band", "key"), bucket_cap, "dedup_minhash_pairs"
-    )
-    a = bands.alias("a")
-    b_ = bands.alias("b")
-    cand = (
-        a.join(
-            b_,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.key") == F.col("b.key"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .distinct()
-    )
+    cand = bucket_pairs(
+        _band_rows(sigs).persist(),
+        ("band", "key"),
+        "doc_id",
+        bucket_cap,
+        "dedup_minhash_pairs",
+    ).distinct()
     # persisted: referenced by BOTH aliases of the verification join
     toks = d.select(
         "doc_id", F.array_distinct(F.split("text", " ")).alias("toks")
@@ -326,18 +321,30 @@ def q_dedup_incremental(
         _band_rows(sigs).persist(), ("band", "key"), bucket_cap, "dedup_incremental"
     )
     gate = md5_long(F.concat(F.lit("inc:"), F.col("doc_id").cast("string"))) % 10
-    batch = bands.where(gate == 0).select(
-        F.col("doc_id").alias("batch_doc_id"), "band", "key"
-    )
-    index = bands.where(gate != 0).select(
-        F.col("doc_id").alias("index_doc_id"), "band", "key"
-    )
-    cand = batch.join(index, ["band", "key"]).select(
-        "batch_doc_id", "index_doc_id"
-    ).distinct()
     toks = d.select(
         "doc_id", F.array_distinct(F.split("text", " ")).alias("toks")
     ).persist()
+    return _incremental_pairs(bands.where(gate == 0), bands.where(gate != 0), toks)
+
+
+def _incremental_pairs(
+    batch: DataFrame, index: DataFrame, toks: DataFrame
+) -> DataFrame:
+    """THE batch⋈index step of both incremental cadences (this operator
+    and the foreachBatch stream): (doc_id, band, key) rows of the batch
+    join the index's on (band, key) — candidates track the batch's dup
+    mass, never an N×N self-join — then the shared exact-Jaccard verify.
+    ``toks`` (doc_id, toks) must cover both sides; the caller guards the
+    index side."""
+    cand = (
+        batch.select(F.col("doc_id").alias("batch_doc_id"), "band", "key")
+        .join(
+            index.select(F.col("doc_id").alias("index_doc_id"), "band", "key"),
+            ["band", "key"],
+        )
+        .select("batch_doc_id", "index_doc_id")
+        .distinct()
+    )
     return _verify_jaccard(
         cand, toks, "batch_doc_id", "index_doc_id", JACCARD_THRESHOLD
     )
@@ -538,26 +545,24 @@ def _simhash_pairs(d: DataFrame, bucket_cap: int | None) -> DataFrame:
         "simhash",
         F.explode(F.expr("array(" + ", ".join(key_exprs) + ")")).alias("bkey"),
     )
-    bands = drop_oversized_buckets(
-        bands.persist(), ("bkey",), bucket_cap, "dedup_simhash_pairs"
-    )
-    a = bands.alias("a")
-    b_ = bands.alias("b")
     # hamming computed and filtered BEFORE the dedup: bit_count is a cheap
     # codegen expression, hamming is functionally determined by the pair,
     # and most within-bucket collisions fail the radius — so the distinct
     # shuffles only matching pairs (<= 20x multiplicity) instead of every
     # candidate row with two 8-byte fingerprints in tow
     return (
-        a.join(
-            b_,
-            (F.col("a.bkey") == F.col("b.bkey"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
+        bucket_pairs(
+            bands.persist(),
+            ("bkey",),
+            "doc_id",
+            bucket_cap,
+            "dedup_simhash_pairs",
+            payload=("simhash",),
         )
         .select(
-            F.col("a.doc_id").alias("doc_a"),
-            F.col("b.doc_id").alias("doc_b"),
-            F.expr("bit_count(a.simhash ^ b.simhash)").alias("hamming"),
+            "doc_a",
+            "doc_b",
+            F.expr("bit_count(simhash_a ^ simhash_b)").alias("hamming"),
         )
         .where(F.col("hamming") <= SIMHASH_HAM_K)
         .distinct()
@@ -674,7 +679,7 @@ def q_dedup_ngram_pairs(
     ).persist()
     # ONE shared guard pass: filtered index + surviving document
     # frequencies from the same aggregation (shingles are distinct per doc)
-    index, _ = drop_oversized_buckets(
+    index = drop_oversized_buckets(
         ex, ("g",), bucket_cap, "dedup_ngram_pairs", with_occupancy=True
     )
     # the guard's filtered frame carries _occ (= document frequency: one
@@ -868,7 +873,7 @@ def q_dedup_containment_prefix(
     # ONE shared guard pass: the filtered index AND the surviving
     # occupancy counts (document frequencies — shingles are distinct per
     # doc) come from the same aggregation via plans/guards
-    index, _ = drop_oversized_buckets(
+    index = drop_oversized_buckets(
         ex, ("g",), df_cap, "dedup_containment_prefix", with_occupancy=True
     )
     index = index.select("doc_id", "g", "_occ")
@@ -1480,7 +1485,7 @@ def q_docs_winnow_pairs(
     any pair sharing a K+W-1-token run appears here.
 
     Scale shape: the self-join runs on the (doc_id, fp_hash)-distinct
-    fingerprint table through ``drop_oversized_buckets`` on fp_hash —
+    fingerprint table through ``bucket_pairs`` on fp_hash —
     the join's own shuffle key (house rule: a hash shared by more docs
     than the cap is boilerplate, non-discriminative by definition, and
     would go quadratic); the pair count is one hash aggregation on the
@@ -1493,12 +1498,8 @@ def q_docs_winnow_pairs(
         .distinct()
         .persist()  # guard occupancy agg + both join sides
     )
-    g = drop_oversized_buckets(fps, ("fp_hash",), bucket_cap, "winnow_pairs")
-    a = g.select(F.col("doc_id").alias("doc_a"), "fp_hash")
-    b = g.select(F.col("doc_id").alias("doc_b"), "fp_hash")
     return (
-        a.join(b, "fp_hash")
-        .where(F.col("doc_a") < F.col("doc_b"))
+        bucket_pairs(fps, ("fp_hash",), "doc_id", bucket_cap, "winnow_pairs")
         .groupBy("doc_a", "doc_b")
         .agg(F.count(F.lit(1)).alias("n_shared_fps"))
     )

@@ -2423,14 +2423,19 @@ def q_docs_decontaminate(
         .persist()
     )
     ex = drop_oversized_buckets(ex, ("g",), df_cap, "docs_decontaminate")
-    eval_side = ex.where(F.col("is_eval")).select(
-        F.col("doc_id").alias("eval_doc_id"), "g"
-    )
-    train_side = ex.where(~F.col("is_eval")).select(
-        F.col("doc_id").alias("train_doc_id"), "g"
-    )
+    return _decontam_pairs(ex.where(~F.col("is_eval")), ex.where(F.col("is_eval")))
+
+
+def _decontam_pairs(train: DataFrame, eval_: DataFrame) -> DataFrame:
+    """THE decontamination tail of every cadence (full scan, incremental
+    batch, foreachBatch stream): (doc_id, g) shingle rows of the train and
+    eval sides join on the shingle, and each (train_doc_id, eval_doc_id)
+    pair sharing >= DECONTAM_MIN_SHARED shingles is one output row. The
+    caller guards the join key (shingles are distinct per doc, so the
+    per-pair row count IS the shared-shingle count)."""
     return (
-        train_side.join(eval_side, "g")
+        train.select(F.col("doc_id").alias("train_doc_id"), "g")
+        .join(eval_.select(F.col("doc_id").alias("eval_doc_id"), "g"), "g")
         .groupBy("train_doc_id", "eval_doc_id")
         .agg(F.count("*").alias("n_shared_ngrams"))
         .where(F.col("n_shared_ngrams") >= DECONTAM_MIN_SHARED)
@@ -2720,20 +2725,12 @@ def q_docs_decontaminate_incremental(
         .persist()
     )
     eval_ix = drop_oversized_buckets(
-        ex.where(F.col("is_eval")).select(F.col("doc_id").alias("eval_doc_id"), "g"),
+        ex.where(F.col("is_eval")).select("doc_id", "g"),
         ("g",),
         df_cap,
         "docs_decontaminate_incremental",
     )
-    batch = ex.where(~F.col("is_eval") & F.col("in_batch")).select(
-        F.col("doc_id").alias("train_doc_id"), "g"
-    )
-    return (
-        batch.join(eval_ix, "g")
-        .groupBy("train_doc_id", "eval_doc_id")
-        .agg(F.count("*").alias("n_shared_ngrams"))
-        .where(F.col("n_shared_ngrams") >= DECONTAM_MIN_SHARED)
-    )
+    return _decontam_pairs(ex.where(~F.col("is_eval") & F.col("in_batch")), eval_ix)
 
 
 SQL_DOCS_DECONTAMINATE_INCREMENTAL = f"""

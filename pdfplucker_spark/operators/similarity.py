@@ -35,7 +35,7 @@ import hashlib
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from pdfplucker_spark.functions.hashing import md5_long, sql_md5_long
-from pdfplucker_spark.plans.guards import DEFAULT_BUCKET_CAP, drop_oversized_buckets
+from pdfplucker_spark.plans.guards import DEFAULT_BUCKET_CAP, bucket_pairs
 from pdfplucker_spark.sources.tables import load
 
 TOP_K = 10
@@ -221,21 +221,13 @@ def q_sim_cosine_dup_pairs(
     dropped-and-logged (``bucket_cap``) so a degenerate corpus cannot make
     the within-bucket self-join quadratic."""
     emb = load(spark, sf_dir, "embeddings")
-    keys = _lsh_keys(emb).persist()
-    keys = drop_oversized_buckets(
-        keys, ("lsh_table", "bucket"), bucket_cap, "sim_cosine_dup_pairs"
-    )
-    a, b = keys.alias("a"), keys.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.lsh_table") == F.col("b.lsh_table"))
-            & (F.col("a.bucket") == F.col("b.bucket"))
-            & (F.col("a.vec_id") < F.col("b.vec_id")),
-        )
-        .select(F.col("a.vec_id").alias("vec_a"), F.col("b.vec_id").alias("vec_b"))
-        .distinct()
-    )
+    cand = bucket_pairs(
+        _lsh_keys(emb).persist(),
+        ("lsh_table", "bucket"),
+        "vec_id",
+        bucket_cap,
+        "sim_cosine_dup_pairs",
+    ).distinct()
     return _exact_cosine_pairs(emb, cand, COSINE_DUP_THRESHOLD).select(
         "vec_a", "vec_b", F.round("cos", 6).alias("cosine")
     )
@@ -1655,16 +1647,7 @@ def _semdedup_tail(emb, cents, cluster_cap, log_label):
     emb = emb.persist()
     # assigned feeds the guard, BOTH self-join aliases and the final output
     assigned = _ivf_assigned_with(emb, cents).persist()
-    blocked = drop_oversized_buckets(assigned, ("cid",), cluster_cap, log_label)
-    a, b = blocked.alias("a"), blocked.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.cid") == F.col("b.cid"))
-            & (F.col("a.vec_id") < F.col("b.vec_id")),
-        )
-        .select(F.col("a.vec_id").alias("vec_a"), F.col("b.vec_id").alias("vec_b"))
-    )
+    cand = bucket_pairs(assigned, ("cid",), "vec_id", cluster_cap, log_label)
     pairs = _exact_cosine_pairs(emb, cand, COSINE_DUP_THRESHOLD).select(
         F.col("vec_a").alias("src"), F.col("vec_b").alias("dst")
     )

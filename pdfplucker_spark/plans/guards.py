@@ -30,62 +30,38 @@ def drop_oversized_buckets(
     cap: int | None,
     log_label: str,
     with_occupancy: bool = False,
-):
+) -> DataFrame:
     """Drop rows of bucket keys whose occupancy exceeds ``cap``.
 
     One counting aggregation on the SAME shuffle key as the downstream
-    candidate join (the exchange is reused), then an inner join keeps only
-    rows of surviving buckets. Dropped buckets are counted and logged —
-    silence here would read as full recall when it isn't. ``keys`` should be
-    persisted by the caller (the guard is its second consumer); the
-    occupancy frame (one row per distinct bucket key) is persisted HERE so
-    the logging count and the filtering join share one aggregation pass
-    instead of recomputing it per consumer. Note the occupancy frame's
-    cardinality is the DISTINCT-key count — tiny for banded LSH (2^r per
-    table) but corpus-scale for raw-shingle guards (decontaminate /
-    containment); MEMORY_AND_DISK default spills it, and the downstream
-    join needs that frame materialized regardless, so the persist trades
-    no extra state for one saved aggregation pass.
+    candidate join (the exchange is reused); the over-cap key set is
+    persisted, counted and logged — silence here would read as full
+    recall when it isn't. At most sum(occ)/cap keys can exceed the cap, so
+    that set is bounded and broadcastable by construction: rows are
+    filtered by a broadcast ANTI-join against it, never by a join-back
+    against the (corpus-scale, for raw-shingle guards) surviving set.
+    NULL-keyed rows are kept by the anti-join and never counted as
+    dropped: NULL never equi-joins NULL, so every downstream candidate
+    join drops them anyway (the documented dedup-family null policy).
+    ``keys`` should be persisted by the caller (the guard is its second
+    consumer).
 
-    ``with_occupancy=True`` additionally returns the SURVIVING occupancy
-    frame ``(key_cols..., _occ)`` — for callers that need the counts
-    themselves (e.g. the prefix filters rank shingles by document
-    frequency): one shared aggregation instead of the caller recomputing
-    it beside the guard. In that mode the filtered frame also CARRIES the
-    ``_occ`` column (the filtering join has it in hand anyway), so callers
-    ranking by occupancy need no second join against the counts.
-
-    Contract note: ``cap=None`` disables the *drop*, but with
-    ``with_occupancy=True`` the returned frame is still ``keys`` inner-joined
-    to the occupancy counts — the schema gains ``_occ`` and any NULL-valued
-    key rows are dropped by the join (NULL never equi-joins NULL). Current
-    callers build shingle/band keys that are never NULL, so this only
-    matters to a future caller that can carry NULL keys: such a caller must
-    pre-filter or use ``with_occupancy=False`` (true pass-through)."""
+    ``with_occupancy=True`` returns instead ``keys`` inner-joined to the
+    surviving occupancy counts, carrying them as ``_occ`` — for callers
+    that rank keys by document frequency (the prefix filters). The counts
+    frame is persisted there, so the drop count and the join share one
+    aggregation pass; the inner join also drops NULL-keyed rows, and
+    ``cap=None`` still joins (schema gains ``_occ``) without dropping.
+    ``cap=None`` alone is a true pass-through."""
     cols = list(key_cols)
-    if cap is None:
-        if not with_occupancy:
-            return keys
-        occ = keys.groupBy(*cols).agg(F.count("*").alias("_occ")).persist()
-        return keys.join(occ, cols), occ
-    if not with_occupancy:
-        # Filter by broadcast ANTI-join against the OVER-cap key set instead
-        # of an inner join against the (corpus-scale, for raw-shingle
-        # guards) surviving set: at most sum(occ)/cap keys can exceed the
-        # cap, so the dropped set is bounded and broadcastable by
-        # construction, and ``keys`` never pays a join-back shuffle — the
-        # guard is one counting aggregation plus a map-side filter. Row
-        # semantics vs the inner-join form: identical for every non-NULL
-        # key; NULL-keyed rows (null-text docs in the *_nulls variants) are
-        # now KEPT, which downstream candidate equi-joins drop anyway —
-        # NULL never equi-joins NULL (the documented dedup-family policy).
-        dropped = (
-            keys.groupBy(*cols)
-            .agg(F.count("*").alias("_occ"))
-            .where(F.col("_occ") > cap)
-            .persist()
-        )
-        n_dropped = dropped.count()
+    if cap is None and not with_occupancy:
+        return keys
+    occ = keys.groupBy(*cols).agg(F.count("*").alias("_occ"))
+    if with_occupancy:
+        occ = occ.persist()
+    if cap is not None:
+        over = occ.where(F.col("_occ") > cap).persist()
+        n_dropped = over.dropna(subset=cols).count()
         if n_dropped:
             log.warning(
                 "%s: dropped %d over-capacity LSH buckets (cap=%d) — "
@@ -94,16 +70,36 @@ def drop_oversized_buckets(
                 n_dropped,
                 cap,
             )
-        return keys.join(F.broadcast(dropped.select(*cols)), cols, "left_anti")
-    occ = keys.groupBy(*cols).agg(F.count("*").alias("_occ")).persist()
-    n_dropped = occ.where(F.col("_occ") > cap).count()
-    if n_dropped:
-        log.warning(
-            "%s: dropped %d over-capacity LSH buckets (cap=%d) — "
-            "non-discriminative keys excluded from the candidate join",
-            log_label,
-            n_dropped,
-            cap,
-        )
-    surviving = occ.where(F.col("_occ") <= cap)
-    return keys.join(surviving, cols), surviving
+    if with_occupancy:
+        return keys.join(occ if cap is None else occ.where(F.col("_occ") <= cap), cols)
+    return keys.join(F.broadcast(over.select(*cols)), cols, "left_anti")
+
+
+def bucket_pairs(
+    keys: DataFrame,
+    key_cols: tuple[str, ...],
+    id_col: str,
+    cap: int | None,
+    log_label: str,
+    payload: tuple[str, ...] = (),
+) -> DataFrame:
+    """THE guarded candidate self-join: every pair of rows sharing all of
+    ``key_cols``, each unordered pair once (``a.id < b.id``), after
+    over-cap buckets are dropped by ``drop_oversized_buckets``. The guard
+    runs below the join, so within-bucket work is bounded by cap² per key.
+
+    Returns ``<stem>_a, <stem>_b`` (``stem`` is ``id_col`` without a
+    ``_id`` suffix: ``doc_id`` gives ``doc_a, doc_b``) and, for each
+    payload column ``p``, ``p_a, p_b``. A pair colliding in several
+    buckets appears once per shared bucket: callers that need unique
+    pairs deduplicate (after any cheap pair filter). ``keys`` should be
+    persisted by the caller — it feeds the guard and both join sides."""
+    kept = drop_oversized_buckets(keys, key_cols, cap, log_label)
+    a, b = kept.alias("a"), kept.alias("b")
+    on = [F.col(f"a.{c}") == F.col(f"b.{c}") for c in key_cols]
+    stem = id_col.removesuffix("_id")
+    return a.join(b, on + [F.col(f"a.{id_col}") < F.col(f"b.{id_col}")]).select(
+        F.col(f"a.{id_col}").alias(f"{stem}_a"),
+        F.col(f"b.{id_col}").alias(f"{stem}_b"),
+        *(F.col(f"{s}.{p}").alias(f"{p}_{s}") for p in payload for s in "ab"),
+    )

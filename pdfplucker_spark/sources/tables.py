@@ -53,8 +53,6 @@ def load(
     exchange for nothing (measured +26-66% on asof/salted/logppl when
     this was blanket-on)."""
     df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
-    if os.environ.get("SPARK_GRAFT_NO_FANOUT"):  # measurement kill-switch
-        fan_out = False
     if fan_out:
         target = spark.sparkContext.defaultParallelism
         if df.rdd.getNumPartitions() * 4 <= target:

@@ -861,10 +861,9 @@ def stream_dedup_incremental(
     from pyspark.sql import functions as F
 
     from pdfplucker_spark.operators.dedup import (
-        JACCARD_THRESHOLD,
         _band_rows,
+        _incremental_pairs,
         _sig_cols,
-        _verify_jaccard,
     )
     from pdfplucker_spark.plans.guards import (
         DEFAULT_BUCKET_CAP,
@@ -940,26 +939,12 @@ def stream_dedup_incremental(
                 # never fires on honest corpora, so the oracle is
                 # unchanged — same treatment as dedup_incremental
                 ib_ok = drop_oversized_buckets(
-                    ib.select(
-                        F.col("doc_id").alias("index_doc_id"), "band", "key"
-                    ),
+                    ib.select("doc_id", "band", "key"),
                     ("band", "key"),
                     DEFAULT_BUCKET_CAP,
                     "stream_dedup_incremental",
                 )
-                cand = (
-                    bands.select(
-                        F.col("doc_id").alias("batch_doc_id"), "band", "key"
-                    )
-                    .join(ib_ok, ["band", "key"])
-                    .select("batch_doc_id", "index_doc_id")
-                    .distinct()
-                )
-                all_toks = toks.unionByName(it)
-                res = _verify_jaccard(
-                    cand, all_toks, "batch_doc_id", "index_doc_id",
-                    JACCARD_THRESHOLD,
-                )
+                res = _incremental_pairs(bands, ib_ok, toks.unionByName(it))
             else:
                 res = sp.createDataFrame(
                     [], "batch_doc_id long, index_doc_id long, jaccard double"
@@ -1017,21 +1002,15 @@ def stream_decontaminate_incremental(
     from pyspark.sql import functions as F
 
     from pdfplucker_spark.operators.dedup import _SHINGLE_OVER_TOKENS
-    from pdfplucker_spark.operators.pipeline import (
-        DECONTAM_DF_CAP,
-        DECONTAM_MIN_SHARED,
-    )
+    from pdfplucker_spark.operators.pipeline import DECONTAM_DF_CAP, _decontam_pairs
     from pdfplucker_spark.plans.guards import drop_oversized_buckets
 
     # the standing index: built ONCE from the staged eval docs, persisted —
     # every micro-batch joins this cached frame instead of re-shingling
     eval_ix = drop_oversized_buckets(
         spark.read.parquet(input_dir + "_eval")
-        .select(
-            F.col("doc_id").alias("eval_doc_id"),
-            F.split("text", " ").alias("__tk"),
-        )
-        .select("eval_doc_id", F.explode(F.expr(_SHINGLE_OVER_TOKENS)).alias("g")),
+        .select("doc_id", F.split("text", " ").alias("__tk"))
+        .select("doc_id", F.explode(F.expr(_SHINGLE_OVER_TOKENS)).alias("g")),
         ("g",),
         DECONTAM_DF_CAP,
         "stream_decontaminate_incremental",
@@ -1055,21 +1034,10 @@ def stream_decontaminate_incremental(
         for bno in bnos:
             sh = (
                 batch_df.where(F.col("bno") == bno)
-                .select(
-                    F.col("doc_id").alias("train_doc_id"),
-                    F.split("text", " ").alias("__tk"),
-                )
-                .select(
-                    "train_doc_id",
-                    F.explode(F.expr(_SHINGLE_OVER_TOKENS)).alias("g"),
-                )
+                .select("doc_id", F.split("text", " ").alias("__tk"))
+                .select("doc_id", F.explode(F.expr(_SHINGLE_OVER_TOKENS)).alias("g"))
             )
-            res = (
-                sh.join(eval_ix, "g")
-                .groupBy("train_doc_id", "eval_doc_id")
-                .agg(F.count("*").alias("n_shared_ngrams"))
-                .where(F.col("n_shared_ngrams") >= DECONTAM_MIN_SHARED)
-            )
+            res = _decontam_pairs(sh, eval_ix)
             res.write.mode("overwrite").parquet(
                 os.path.join(output_dir, f"bno={bno}")
             )

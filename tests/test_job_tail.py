@@ -69,6 +69,33 @@ def test_metrics_exact_with_duplicated_doc_ids(spark, tmp_path):
     _assert_exact(spark, m, out)
 
 
+def test_metadata_input_with_duplicated_doc_ids(spark, t1_path, tmp_path):
+    """An input with a metadata column that repeats a doc_id k times: the
+    metadata side of the docs_out join is doc_id-unique, so docs_out
+    holds one row per extracted row (k, not k²) and the metrics row still
+    equals run_metrics over it."""
+    base = spark.read.parquet(t1_path)
+    dup = base.unionByName(base.orderBy("doc_id").limit(3))
+    src = str(tmp_path / "dup_meta")
+    dup.withColumn(
+        "metadata",
+        F.struct(
+            F.lit("PDF 1.7").alias("format"),
+            F.concat(F.lit("title-"), "doc_id").alias("title"),
+            F.lit(None).cast("string").alias("creationDate"),
+            F.lit(None).cast("string").alias("modDate"),
+            F.concat(F.col("doc_id"), F.lit(".pdf")).alias("filename"),
+            F.size("spans").alias("pageAmount"),
+        ),
+    ).write.parquet(src)
+    out = str(tmp_path / "out")
+    m = job.run(spark, src, out, run_id="dm", partitions=4)
+    docs = job.committed_view(spark, out, "docs_out")
+    assert m["total_docs"] == docs.count() == 103
+    assert docs.where(F.col("metadata.title").isNull()).count() == 0
+    _assert_exact(spark, m, out)
+
+
 def test_metrics_exact_on_zero_doc_resume(spark, t1_path, tmp_path):
     """The resume run finds nothing left: its plan is empty at runtime, the
     case in which an Observation below persist returns no row."""

@@ -1,6 +1,7 @@
 """Plan-shape regression guards: the scale properties BENCH/PLANS.md
 documents are asserted here so a refactor cannot silently lose them."""
 
+import pytest
 from pyspark.sql import functions as F
 
 from pdfplucker_spark.operators.extract import extract_spans
@@ -497,3 +498,56 @@ def test_cms_and_entropy_plans_broadcast_or_joinless(spark):
     assert "BroadcastHashJoin" in plan
     plan = _plan(q_docs_token_entropy(spark, SF))
     assert "Join" not in plan, plan[:2000]
+
+
+# (id column, Exchange count of the executed plan at SF, cached sub-plans
+# included) per bucket_pairs operator: the shared self-join must add and
+# remove no shuffle relative to the per-site joins it replaced.
+_BUCKET_PAIR_EXCHANGES = {
+    "dedup_minhash_pairs": ("doc_id", 10),
+    "dedup_simhash_pairs": ("doc_id", 32),
+    "sim_cosine_dup_pairs": ("vec_id", 10),
+    "docs_winnow_pairs": ("doc_id", 32),
+    "sim_semdedup": ("vec_id", 33),
+}
+
+
+@pytest.mark.parametrize("op", sorted(_BUCKET_PAIR_EXCHANGES))
+def test_bucket_pairs_guard_below_self_join(spark, monkeypatch, op):
+    """Both sides of the candidate self-join (the ``a.id < b.id`` join)
+    are filtered by the guard's broadcast left-anti join, and the plan
+    keeps its exchange count."""
+    import re
+
+    import pdfplucker_spark.operators.pipeline as P
+    from pdfplucker_spark.registry import all_queries
+
+    id_col, exchanges = _BUCKET_PAIR_EXCHANGES[op]
+    seen = {}
+    real_cc = P.connected_components
+
+    def spy(nodes, pairs):
+        seen["pairs"] = pairs
+        return real_cc(nodes, pairs)
+
+    # SemDeDup's output is checkpointed by connected_components: pin the
+    # candidate pair frame fed into it instead
+    monkeypatch.setattr(P, "connected_components", spy)
+    spark.catalog.clearCache()  # earlier tests' caches must not substitute
+    df = all_queries()[op][0](spark, SF)
+    plan = _plan(seen.get("pairs", df))
+    lines = plan.splitlines()
+    cond = re.compile(rf"\({id_col}#\d+L? < {id_col}#\d+L?\)")
+    (at,) = [i for i, ln in enumerate(lines) if "Inner" in ln and cond.search(ln)]
+
+    def depth(ln):
+        return len(ln) - len(ln.lstrip(" :+-"))
+
+    sub = []
+    for ln in lines[at + 1 :]:
+        if depth(ln) <= depth(lines[at]):
+            break
+        sub.append(ln)
+    anti = [ln for ln in sub if "BroadcastHashJoin" in ln and "LeftAnti" in ln]
+    assert len(anti) == 2, plan[:4000]
+    assert plan.count("Exchange") == exchanges, plan[:4000]

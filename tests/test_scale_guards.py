@@ -47,6 +47,83 @@ def test_ngram_bucket_guard_bounds_degenerate_corpus(spark, tmp_path, caplog):
                for r in caplog.records)
 
 
+def _dropped(records, label: str) -> list:
+    """The drop counts the bucket guard logged under ``label``."""
+    return [
+        r.args[1]
+        for r in records
+        if "over-capacity" in str(r.msg) and r.args[0] == label
+    ]
+
+
+# (module, operator, guard log label, cap below the corpus's key occupancy:
+# 400 identical docs; the eval side of decontamination is ~1/10 of them)
+_DEGENERATE_OPS = [
+    ("dedup", "q_dedup_minhash_pairs", "dedup_minhash_pairs", 100),
+    ("dedup", "q_dedup_incremental", "dedup_incremental", 100),
+    ("dedup", "q_dedup_containment_pairs", "dedup_containment_pairs", 100),
+    ("dedup", "q_dedup_containment_prefix", "dedup_containment_prefix", 100),
+    ("dedup", "q_docs_winnow_pairs", "winnow_pairs", 100),
+    ("pipeline", "q_docs_decontaminate_incremental",
+     "docs_decontaminate_incremental", 10),
+]
+
+
+@pytest.mark.parametrize(
+    "module,op,label,cap", _DEGENERATE_OPS, ids=[o[1] for o in _DEGENERATE_OPS]
+)
+def test_bucket_guard_bounds_degenerate_corpus(
+    spark, tmp_path, caplog, module, op, label, cap
+):
+    """The boilerplate corpus through every other guarded operator: each
+    key's occupancy is above ``cap``, so the guard logs a nonzero drop
+    under the operator's label and the candidate join emits nothing
+    instead of going quadratic."""
+    import importlib
+
+    fn = getattr(importlib.import_module(f"pdfplucker_spark.operators.{module}"), op)
+    _write_degenerate_docs(spark, str(tmp_path))
+    with caplog.at_level(logging.WARNING, logger="pdfplucker_spark.plans.guards"):
+        assert fn(spark, str(tmp_path), cap).count() == 0
+    counts = _dropped(caplog.records, label)
+    assert counts and all(n > 0 for n in counts), [
+        r.getMessage() for r in caplog.records
+    ]
+
+
+@pytest.mark.parametrize(
+    "op,label",
+    [
+        ("q_dedup_minhash_pairs", "dedup_minhash_pairs"),
+        ("q_dedup_simhash_pairs", "dedup_simhash_pairs"),
+    ],
+)
+def test_bucket_guard_does_not_count_null_keys(spark, tmp_path, caplog, op, label):
+    """More NULL-text docs than the cap: their NULL band keys form one
+    over-cap bucket per band, which the anti-join keeps (NULL never
+    equi-joins, so they pair with nothing). Counting it as dropped would
+    overstate the guard's recall loss — nothing is logged, and the NULL
+    docs still appear in no pair."""
+    from pdfplucker_spark.operators import dedup
+
+    rows = [
+        Row(doc_id=i, text=f"doc {i} alpha{i} beta{i * 7} gamma{i * 13} delta",
+            lang="en", source="crawl", n_chars=30)
+        for i in range(60)
+    ] + [
+        Row(doc_id=1000 + i, text=None, lang="en", source="crawl", n_chars=0)
+        for i in range(40)
+    ]
+    spark.createDataFrame(rows, "doc_id long, text string, lang string, "
+                          "source string, n_chars long").write.parquet(
+        f"{tmp_path}/documents.parquet"
+    )
+    with caplog.at_level(logging.WARNING, logger="pdfplucker_spark.plans.guards"):
+        out = getattr(dedup, op)(spark, str(tmp_path), 20).collect()
+    assert not _dropped(caplog.records, label), [r.getMessage() for r in caplog.records]
+    assert not any(r.doc_a >= 1000 or r.doc_b >= 1000 for r in out)
+
+
 def test_ngram_bucket_guard_silent_on_honest_corpus(spark):
     """The default cap must never fire on the driver corpus: guarded and
     unguarded results are identical at sf0.001."""
